@@ -27,22 +27,11 @@ object BenchEnv {
       "/dev/shm/graft-pcap-bench"
     else "/tmp/graft-pcap-bench"
 
-  /** The ONE stride-shard formula the convert CLI plans (review finding:
-    * four hand-copies had already started drifting — an instrument whose
-    * arm reads at a different parallelism than the CLI measures the
-    * scan, not the change under test). */
-  def pcapShards(spark: org.apache.spark.sql.SparkSession, glob: String): Int = {
-    val nFiles = math.max(1, graft.sources.PcapFileEnum
-      .list(Seq(glob), spark.sessionState.newHadoopConf()).size)
-    math.max(1, math.min(1024, math.ceil(
-      spark.sparkContext.defaultParallelism.toDouble / nFiles).toInt))
-  }
-
-  /** Stride-sharded pcap read, exactly as the CLI plans it. */
-  def pcapRead(spark: org.apache.spark.sql.SparkSession,
-      glob: String): org.apache.spark.sql.DataFrame =
-    spark.read.format("pcap")
-      .option("decodePartitions", pcapShards(spark, glob)).load(glob)
+  /** The convert CLI's default stride shards ([[graft.spark.PcapConvert.shards]]):
+    * an instrument whose arm reads at a different parallelism than the
+    * CLI measures the scan, not the change under test. */
+  def pcapShards(spark: org.apache.spark.sql.SparkSession, glob: String): Int =
+    graft.spark.PcapConvert.shards(spark, glob)
 
   /** The shared interleaved-A/B session: local[32], tmpfs local dir, 32
     * shuffle partitions, AQE on, UI off — identical across instruments

@@ -176,8 +176,8 @@ object MinStructAgg {
     * CAVEAT (listener registration is per-session): anything that must
     * observe the executed query from the ORIGINAL session — an
     * `Observation`, a QueryExecutionListener — must be attached AFTER
-    * re-rooting (see `Defrag.statsAndSpill`: scoped first, observe on
-    * the scoped frame), or its listener never fires.
+    * re-rooting (scope first, then observe the scoped frame), or its
+    * listener never fires.
     */
   def scoped(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val parent = df.sparkSession

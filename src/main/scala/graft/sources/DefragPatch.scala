@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
   * RowToColumnarExec rebatch costing ~50% of the defrag-convert write
   * (`tools.BenchRebatchBound`, interleaved: join 17.3 s vs no-join
   * 8.4–9.8 s median at 100M packets) — so on the broadcast branch the
-  * enrichment moves INTO the scan: the spilled first-fragment aggregate
+  * enrichment moves INTO the scan: the first-fragment aggregate
   * (bounded by distinct datagram keys — the same rows a broadcast hash
   * join would ship) is collected into one compact map, broadcast once,
   * and each reader patches its dissection accumulator before the column
@@ -185,7 +185,7 @@ object DefragPatch {
 
   /** [[build]] with a ROW CAP (round 16, the fused stats pass): the
     * caller cannot know the distinct-key count before the aggregate
-    * runs (the old flow learned it from the spill parquet's footer), so
+    * runs, so
     * the collect itself enforces the broadcast ceiling — fragments are
     * merged as they arrive and DISCARDED wholesale the moment the
     * cumulative row count exceeds `maxRows` (driver memory stays

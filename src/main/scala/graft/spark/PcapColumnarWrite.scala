@@ -42,8 +42,8 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * into fresh ColumnVectors once (cheap primitive-array appends), and
   * the write still skips ColumnarToRow + per-row record assembly
   * (ParquetWriteSupport's RecordConsumer walk). Honest magnitude —
-  * INTERLEAVED A/B only (`tools.BenchDefragWrite`, same stride-sharded
-  * read both arms): rebatch+vector ~15% ahead of the row writer on the
+  * INTERLEAVED A/B only (round 11, same stride-sharded read both
+  * arms): rebatch+vector ~15% ahead of the row writer on the
   * 10M broadcast branch (3.21 vs 3.70 s median) and ahead on the 100M
   * shuffle-bypass branch too. Sequential BenchPcap arms are NOT a
   * writer A/B at these sizes: they read 2.1× one session and 0.8× the

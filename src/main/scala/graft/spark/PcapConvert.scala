@@ -16,29 +16,11 @@ object PcapConvert {
       file: String = "",
       out: String = "",
       nodefrag: Boolean = false,
-      jobs: Int = 0, // 0 = let Spark decide (per-file tasks)
+      jobs: Int = 0, // -j: total decode tasks; 0 = defaultParallelism
       verbose: Boolean = false,
       debug: Boolean = false,
       singleFile: Boolean = true,
       referenceCompat: Boolean = false,
-      /** None = auto: cache the parsed table when the input is small
-        * enough to surely fit (multi-pass defrag then reads it once),
-        * re-parse per pass otherwise (the 100 TB-safe default). */
-      cache: Option[Boolean] = None,
-      /** Force the legacy RDD row-materializing read (the pre-round-9
-        * default) instead of the columnar DSv2 scan — the fallback knob
-        * for the round-9 columnar attempt. */
-      rowPath: Boolean = false,
-      /** Force the standard FileFormatWriter instead of the round-10
-        * vector-direct parquet writer ([[PcapColumnarWrite]]). The
-        * vector writer engages on every convert shape: columnar plans
-        * (nodefrag / defrag-skip) feed vectors straight through, and
-        * row-shaped defrag outputs re-batch via RowToColumnarExec
-        * (round 11 — ~15% ahead at 10M, ahead at 100M; interleaved
-        * measurement, tools.BenchDefragWrite). Single-file output
-        * rides the vector path via an RDD-level coalesce (batches
-        * stay columnar into one task). */
-      rowWrite: Boolean = false,
       /** `-m`: after the write, index the output with a
         * [[graft.sources.ConvertManifest]] — per-part-file frame_time
         * zone maps + ip_src/ip_dst blooms, so the canonical "slice one
@@ -69,11 +51,7 @@ object PcapConvert {
       case ("-v" | "--verbose") :: t => loop(t, a.copy(verbose = true))
       case ("-d" | "--debug") :: t   => loop(t, a.copy(debug = true))
       case "--multi-file" :: t       => loop(t, a.copy(singleFile = false))
-      case "--cache" :: t            => loop(t, a.copy(cache = Some(true)))
-      case "--no-cache" :: t         => loop(t, a.copy(cache = Some(false)))
-      case "--row-path" :: t         => loop(t, a.copy(rowPath = true))
       case ("-m" | "--manifest") :: t => loop(t, a.copy(manifest = true))
-      case "--row-write" :: t        => loop(t, a.copy(rowWrite = true))
       case ("-c" | "--compression") :: v :: t =>
         loop(t, a.copy(compression = v))
       case "--reference-compat" :: t => loop(t, a.copy(referenceCompat = true))
@@ -131,63 +109,59 @@ object PcapConvert {
     } finally in.close()
   }
 
+  /** Stride shards per capture file for the DSv2 scan: `jobs` (at 0, the
+    * session's defaultParallelism) spread over the files `glob` lists,
+    * capped at 1024. When there are fewer files than cores, each file is
+    * stride-sharded so dissection AND the parquet encode both use the
+    * whole machine (per-file tasks left a 32-core box writing on 8).
+    */
+  def shards(spark: SparkSession, glob: String, jobs: Int = 0): Int = {
+    val nFiles = math.max(1, graft.sources.PcapFileEnum
+      .list(Seq(glob), spark.sessionState.newHadoopConf()).size)
+    val want = if (jobs > 0) jobs else spark.sparkContext.defaultParallelism
+    math.max(1, math.min(1024, math.ceil(want.toDouble / nFiles).toInt))
+  }
+
+  /** One convert, one decision tree (reference src/main.rs:268-301):
+    *   - `-n`: write the plain scan;
+    *   - speculative single pass: the prefix sample reads < 0.2%
+    *     fragmented, so the exact stats ride the output write and are
+    *     validated after it;
+    *   - otherwise the fused stats pass ([[Defrag.statsAndBuild]]), then
+    *     skip defrag (< 1%), write the broadcast patch, or — when the
+    *     distinct datagram keys overflow
+    *     [[Defrag.MaxBroadcastFirstFragments]] — spill the first
+    *     fragments and write the shuffle join.
+    * Every leaf writes through [[PcapColumnarWrite]] (vectors straight
+    * into parquet; a row-shaped join output re-batches).
+    */
   def run(spark: SparkSession, a: Args): Unit = {
     if (a.debug) spark.sparkContext.setLogLevel("DEBUG")
     val mode: PcapFramer.Mode =
       if (a.referenceCompat) PcapFramer.ReferenceCompat else PcapFramer.Sane
     val m = PcapSource.metrics(spark)
-    // Read path (round 9): the DSv2 columnar scan — accumulator fields
-    // go straight into OnHeapColumnVectors (no per-packet row + boxing)
-    // and, when there are fewer files than cores, each file is
-    // stride-sharded so dissection AND the parquet encode both
-    // parallelize to the full machine (the old per-file task layout left
-    // a 32-core box writing on 8 tasks). `--row-path` restores the RDD
-    // row reader; `-j N` still forces an explicit total parallelism.
     val metricsKey = java.util.UUID.randomUUID().toString
-    // statsParsed (round 13): the SAME DSv2 scan with the first-fragment
-    // dissect gate — the defrag stats+spill job reads it instead of the
-    // full scan, so only actual UDP first fragments pay transport/L7
-    // dissection there (sound by construction: see Defrag.applyWithSpill;
-    // no metricsKey — the stats pass would double-count packets).
-    // mkScan stays available for the columnar broadcast-patch path,
-    // which builds one more scan carrying the patch-map key.
-    var statsParsed: Option[org.apache.spark.sql.DataFrame] = None
-    var mkScan: Map[String, String] => org.apache.spark.sql.DataFrame = null
-    val parsed =
-      if (a.rowPath)
-        PcapSource.read(spark, a.file, mode, decodePartitions = a.jobs,
-          metrics = Some(m))
-      else {
-        PcapSource.registerMetrics(metricsKey, m)
-        val nFiles = math.max(1, graft.sources.PcapFileEnum
-          .list(Seq(a.file), spark.sessionState.newHadoopConf()).size)
-        val want = if (a.jobs > 0) a.jobs else spark.sparkContext.defaultParallelism
-        val shards = math.max(1, math.min(1024,
-          math.ceil(want.toDouble / nFiles).toInt))
-        mkScan = (extra: Map[String, String]) => {
-          val r = spark.read.format("pcap")
-            .option("mode", if (a.referenceCompat) "reference-compat" else "sane")
-            .option("decodePartitions", shards)
-          extra.foldLeft(r) { case (b, (k, v)) => b.option(k, v) }.load(a.file)
-        }
-        if (!a.nodefrag)
-          statsParsed = Some(mkScan(Map("_internal.dissectGate" -> "first-fragment")))
-        mkScan(Map("metricsKey" -> metricsKey))
-      }
-    // Pass strategy (re-measured round 8, 10M packets, local[32]):
-    //   - plan-driven:  defrag re-parses per pass — 1.59M pkt/s
-    //   - cached:       1 parse + cached passes   — 904k pkt/s
-    //   - parquet-temp (the reference's flow): the 31-col parquet WRITE
-    //     costs ~2.6× a parse, so writing twice always loses.
-    // Round 2 measured the opposite (cached 2.4× faster) and auto mode
-    // cached small inputs; the allocation-lean dissector then halved the
-    // parse cost and flipped the trade — re-reading tmpfs/page-cache bytes
-    // through the dissector now beats round-tripping InternalRows through
-    // block-manager storage. Plan-driven is also the only strategy a
-    // 100 TB capture can take, so auto = plan-driven unconditionally;
-    // --cache remains as an explicit override (BenchPcap A/Bs both).
-    val doCache = a.cache.getOrElse(false)
-    val pcap = if (doCache) parsed.cache() else parsed
+    PcapSource.registerMetrics(metricsKey, m)
+    val nShards = shards(spark, a.file, a.jobs)
+    def scan(extra: (String, String)*): org.apache.spark.sql.DataFrame = {
+      val r = spark.read.format("pcap")
+        .option("mode", if (a.referenceCompat) "reference-compat" else "sane")
+        .option("decodePartitions", nShards)
+      extra.foldLeft(r) { case (b, (k, v)) => b.option(k, v) }.load(a.file)
+    }
+    // re-parsed per pass, never cached: re-reading the capture through
+    // the dissector beats round-tripping rows through block storage
+    // (round 8), and it is the only strategy a 100 TB capture can take
+    val pcap = scan("metricsKey" -> metricsKey)
+    def write(df: org.apache.spark.sql.DataFrame,
+        order: Option[Seq[String]] = None,
+        fragCounters: Option[(org.apache.spark.util.LongAccumulator,
+          org.apache.spark.util.LongAccumulator)] = None): Unit = {
+      PcapColumnarWrite.write(df, a.out, a.compression,
+        singleFile = a.singleFile, rebatch = true, outputOrder = order,
+        fragCounters = fragCounters)
+      ()
+    }
     // live progress (reference parity, src/statswriter.rs:64-68): the
     // accumulators tick as tasks finish, so a long 100 TB conversion shows
     // a running count instead of one number at the end
@@ -207,167 +181,93 @@ object PcapConvert {
         th.start()
         th
       }
-    // ff spill (round 12): the adaptive stats job now ALSO materializes
-    // the first-fragment aggregate (bounded by distinct datagram keys,
-    // never the corpus) so the defrag join reads it back instead of
-    // re-parsing the capture — 3 full dissect passes become 2. Sibling
-    // of the output so it rides the same FS; deleted after the write.
-    val ffSpill = a.out + ".ffspill"
-    def dropSpill(): Unit =
-      if (!a.nodefrag) {
-        val p = new org.apache.hadoop.fs.Path(ffSpill)
-        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-        fs.delete(p, true)
-        ()
+    // The speculative single pass (round 13): most real captures sit
+    // under the 1% defrag threshold, so when a ~60 ms prefix sample reads
+    // < 0.2% fragmented, the plain output is written with the exact
+    // (total, fragmented) counts riding the write as accumulators — one
+    // read of the corpus. True when the exact count confirms the skip. A
+    // misread (fragments beyond the sampled prefix) deletes the output,
+    // rolls both progress counters back so the rewrite counts once
+    // (reference parity: one number per convert) and returns false — one
+    // wasted pass, never a wrong result. The sample threshold sits 5×
+    // under the decision threshold, so only genuinely skewed captures
+    // (unfragmented head, fragmented tail) mispredict.
+    def speculated(): Boolean = sampleFragPct(spark, a.file, mode) < 0.2 && {
+      val accTotal = spark.sparkContext.longAccumulator("spec_total")
+      val accFrag = spark.sparkContext.longAccumulator("spec_frag")
+      val errsBefore = m.errors.value
+      write(pcap, fragCounters = Some((accTotal, accFrag)))
+      val total = accTotal.value
+      val pctExact =
+        if (total == 0) 0.0
+        else math.round(100.0 * accFrag.value / total).toDouble
+      pctExact < 1.0 || {
+        val p = new org.apache.hadoop.fs.Path(a.out)
+        p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
+        m.packets.add(-total)
+        m.errors.add(errsBefore - m.errors.value)
+        false
       }
+    }
+    // first-fragment spill for the shuffle leaf: a sibling of the output
+    // so it rides the same FS; deleted after the write
+    val ffSpill = new org.apache.hadoop.fs.Path(a.out + ".ffspill")
     try {
-      // Round-13 columnar broadcast-patch path (the default convert
-      // shape): tools.BenchRebatchBound measured the row-shaped
-      // broadcast join + RowToColumnarExec rebatch at ~50% of the
-      // defrag-convert write (join 17.8 s vs no-join 8.8 s median,
-      // interleaved, 100M packets) — so on the broadcast branch the
-      // enrichment moves INTO the scan: the spilled ff aggregate is
-      // collected + broadcast (exactly what a broadcast join ships) and
-      // each reader patches its accumulator before the vectors fill
-      // (graft.sources.DefragPatch). The plan is scan → vector write,
-      // columnar end to end; the reference's patched-at-end column
-      // order is restored by the WRITER's permutation (a select reorder
-      // would re-introduce the rebatch). The shuffle branch and the
-      // --row-path/--row-write/--cache shapes keep the join.
-      val patchPath = !a.nodefrag && !a.rowPath && !a.rowWrite && !doCache &&
-        statsParsed.isDefined
-      if (patchPath) {
-        def vecOrRow(df: org.apache.spark.sql.DataFrame,
-            order: Option[Seq[String]] = None): Unit =
-          if (!PcapColumnarWrite.write(df, a.out, a.compression,
-              singleFile = a.singleFile, rebatch = true, outputOrder = order))
-            PcapSource.write(df, a.out, a.singleFile, a.compression)
-        // Speculative SINGLE-PASS convert (round 13): most real captures
-        // sit under the 1% defrag threshold, yet the pipeline always
-        // paid a stats pass before the write. A ~60 ms driver-side
-        // prefix sample picks the strategy; when it reads (nearly)
-        // unfragmented, the exact stats ride the OUTPUT write itself as
-        // accumulators — one read of the corpus total. The speculation
-        // is validated against the exact whole-corpus counts after the
-        // write: a misread (fragments beyond the sampled prefix) drops
-        // the output, rolls the progress counters back, and falls
-        // through to the normal stats+spill flow — one wasted pass,
-        // never a wrong result. The 0.2% sample threshold is 5× under
-        // the decision threshold, so only genuinely skewed captures
-        // (unfragmented head, fragmented tail) ever mispredict.
-        // graft.convert.noSpeculate: instrumentation escape hatch (the
-        // interleaved A/B needs both strategies in one JVM)
-        val speculate = !sys.props.contains("graft.convert.noSpeculate") &&
-          sampleFragPct(spark, a.file, mode) < 0.2
-        val speculated = speculate && {
-          val accTotal = spark.sparkContext.longAccumulator("spec_total")
-          val accFrag = spark.sparkContext.longAccumulator("spec_frag")
-          val errsBefore = m.errors.value
-          val wrote = PcapColumnarWrite.write(
-            pcap, a.out, a.compression, singleFile = a.singleFile,
-            rebatch = true, fragCounters = Some((accTotal, accFrag)))
-          wrote && {
-            val total = accTotal.value
-            val pctExact =
-              if (total == 0) 0.0
-              else math.round(100.0 * accFrag.value / total).toDouble
-            if (pctExact < 1.0) true
-            else {
-              // mispredicted: discard and take the normal flow below;
-              // roll back BOTH progress counters so the rewrite's pass
-              // counts once (reference parity: one number per convert)
-              val p = new org.apache.hadoop.fs.Path(a.out)
-              p.getFileSystem(spark.sessionState.newHadoopConf())
-                .delete(p, true)
-              m.packets.add(-total)
-              m.errors.add(errsBefore - m.errors.value)
-              false
+      if (a.nodefrag) write(pcap)
+      else if (!speculated()) {
+        // the fused stats pass (round 16): one job counts (total,
+        // fragmented) in the readers, pushes the first-fragment filter
+        // into the gated scan and collects the patch map
+        val statsKey = java.util.UUID.randomUUID().toString
+        val sm = PcapSource.statsMetrics(spark)
+        PcapSource.registerMetrics(statsKey, sm)
+        val fused =
+          try Defrag.statsAndBuild(
+            scan("_internal.dissectGate" -> "first-fragment",
+              "metricsKey" -> statsKey),
+            sm, Defrag.MaxBroadcastFirstFragments)
+          finally PcapSource.unregisterMetrics(statsKey)
+        if (fused.pct < 1.0) write(pcap) // defrag skip (main.rs:277)
+        else fused.map match {
+          case Some(map) =>
+            // broadcast patch (round 13): each reader patches its
+            // accumulator from the map before the vectors fill — scan →
+            // vector write with no join node; the writer's permutation
+            // restores the reference's patched-at-end column order
+            val bc = spark.sparkContext.broadcast(map)
+            val pk = java.util.UUID.randomUUID().toString
+            graft.sources.DefragPatch.register(pk, bc)
+            try {
+              val patched = scan("metricsKey" -> metricsKey,
+                "defragPatchKey" -> pk)
+              write(patched,
+                order = Some(Defrag.defraggedOrder(patched.columns.toSeq)))
+            } finally {
+              graft.sources.DefragPatch.unregister(pk)
+              bc.destroy()
             }
-          }
+          case None =>
+            // > ceiling DISTINCT keys: the shuffle join needs a
+            // distributed ff side — spill it now (one extra gated pass;
+            // collecting past the ceiling is exactly what buildCapped
+            // exists to refuse)
+            Defrag.firstFragments(
+              scan("_internal.dissectGate" -> "first-fragment"))
+              .write.mode("overwrite").option("compression", "zstd")
+              .parquet(ffSpill.toString)
+            write(Defrag.defragWith(pcap,
+              spark.read.parquet(ffSpill.toString), broadcastFF = false))
         }
-        // the broadcast-patch write, shared by the fused and spill flows
-        def patchedWrite(map: graft.sources.DefragPatch.PatchMap): Unit = {
-          val bc = spark.sparkContext.broadcast(map)
-          val pk = java.util.UUID.randomUUID().toString
-          graft.sources.DefragPatch.register(pk, bc)
-          try {
-            val patched = mkScan(Map(
-              "metricsKey" -> metricsKey, "defragPatchKey" -> pk))
-            vecOrRow(patched,
-              order = Some(Defrag.defraggedOrder(patched.columns.toSeq)))
-          } finally {
-            graft.sources.DefragPatch.unregister(pk)
-            bc.destroy()
-          }
-        }
-        if (speculated) ()
-        else if (!sys.props.contains("graft.convert.noFuseStats")) {
-          // FUSED stats pass (round 16, verdict #1): one job — gated
-          // scan with reader-side (total, fragmented) counting, the
-          // first-fragment filter pushed INTO the scan, ending at the
-          // collected patch-map arrays (see Defrag.statsAndBuild). The
-          // sysprop restores the observe+spill flow for the interleaved
-          // A/B (tools.BenchConvertFuse needs both in one JVM).
-          val statsKey = java.util.UUID.randomUUID().toString
-          val sm = PcapSource.statsMetrics(spark)
-          PcapSource.registerMetrics(statsKey, sm)
-          val fused =
-            try Defrag.statsAndBuild(
-              mkScan(Map("_internal.dissectGate" -> "first-fragment",
-                "metricsKey" -> statsKey)),
-              sm, Defrag.MaxBroadcastFirstFragments)
-            finally PcapSource.unregisterMetrics(statsKey)
-          if (fused.pct < 1.0) vecOrRow(pcap) // defrag skip (main.rs:277)
-          else fused.map match {
-            case Some(map) => patchedWrite(map)
-            case None =>
-              // > ceiling DISTINCT keys: the shuffle join needs a
-              // distributed ff side — spill it now (one extra gated
-              // pass; a corpus this pathological pays far more in the
-              // join itself, and collecting past the ceiling is exactly
-              // what buildCapped exists to refuse)
-              Defrag.firstFragments(statsParsed.get).write.mode("overwrite")
-                .option("compression", "zstd").parquet(ffSpill)
-              vecOrRow(Defrag.defragWith(pcap,
-                spark.read.parquet(ffSpill), broadcastFF = false))
-          }
-        } else {
-        val (pct, ffRows) = Defrag.statsAndSpill(statsParsed.get, ffSpill)
-        if (pct < 1.0) vecOrRow(pcap) // defrag skip (reference main.rs:277)
-        else if (ffRows <= Defrag.MaxBroadcastFirstFragments)
-          patchedWrite(graft.sources.DefragPatch.build(
-            spark.read.parquet(ffSpill)))
-        else vecOrRow(Defrag.defragWith(pcap,
-          spark.read.parquet(ffSpill), broadcastFF = false))
-        }
-      } else {
-        // adaptive: joins only when >= 1% fragmented. The stats+spill
-        // job reads the ff-gated scan when one exists (DSv2, uncached —
-        // a cached table is already parsed, so the gate would only
-        // force a pointless re-parse; the row path has no scan options).
-        val out =
-          if (a.nodefrag) pcap
-          else Defrag.applyWithSpill(pcap,
-            statsParsed.filter(_ => !doCache).getOrElse(pcap), ffSpill, 1.0)._1
-        // round-10/11 vector-direct write: when the plan under the write
-        // is still columnar (nodefrag, or the adaptive defrag-skip
-        // branch), the batch vectors go straight into parquet-mr's
-        // column writers — no ColumnarToRow, no per-row record assembly.
-        // Row-shaped defrag outputs re-batch through RowToColumnarExec
-        // into the same writer (round 11, interleaved
-        // tools.BenchDefragWrite). Single-file output coalesces at the
-        // RDD level (batches stay columnar). `--row-write` restores the
-        // standard FileFormatWriter.
-        val vecWritten = !a.rowWrite &&
-          PcapColumnarWrite.write(out, a.out, a.compression,
-            singleFile = a.singleFile, rebatch = true)
-        if (!vecWritten)
-          PcapSource.write(out, a.out, a.singleFile, a.compression)
       }
     } finally {
       progress.foreach(_.interrupt())
       PcapSource.unregisterMetrics(metricsKey)
-      try dropSpill() catch { case _: java.io.IOException => () }
+      if (!a.nodefrag)
+        try {
+          ffSpill.getFileSystem(spark.sessionState.newHadoopConf())
+            .delete(ffSpill, true)
+          ()
+        } catch { case _: java.io.IOException => () }
     }
     if (a.manifest) {
       val n = graft.sources.ConvertManifest.build(spark, a.out)
@@ -376,7 +276,6 @@ object PcapConvert {
     if (a.verbose)
       System.err.println(
         s"Packets: ${m.packets.value} Errors: ${m.errors.value}")
-    if (doCache) pcap.unpersist()
   }
 
   def main(argv: Array[String]): Unit = {

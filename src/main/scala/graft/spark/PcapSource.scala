@@ -127,20 +127,4 @@ object PcapSource {
     val cut = path.lastIndexOf('/')
     if (cut < 0) path else path.substring(cut + 1)
   }
-
-  /** Write the packet table the way the reference does: snappy Parquet
-    * (reference src/statswriter.rs:36-40). `singleFile = true` reproduces
-    * the one-file-per-run contract via coalesce(1); leave false at scale —
-    * many part files parallelize both the write and downstream scans.
-    * `compression` defaults to snappy here for reference parity at the
-    * library surface; the CONVERT CLI defaults to zstd — BenchCodec's
-    * interleaved measurement shows wall-time parity across codecs on
-    * this schema while zstd halves the output bytes (39 vs 83 MB on the
-    * 10M corpus), i.e. half the write I/O and downstream scan cost free.
-    */
-  def write(df: DataFrame, out: String, singleFile: Boolean = false,
-      compression: String = "snappy"): Unit = {
-    val d = if (singleFile) df.coalesce(1) else df
-    d.write.mode("overwrite").option("compression", compression).parquet(out)
-  }
 }

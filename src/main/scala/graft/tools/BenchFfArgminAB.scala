@@ -2,10 +2,10 @@ package graft.tools
 
 /** Order-alternating interleaved pair A/B of the FUSED defrag stats job
   * only: MinStructAgg (ObjectHashAggregate) vs declarative min(struct)
-  * (SortAggregate) — the round-16 argmin decision pair BenchStatsGate's
-  * fixed arm order could never read cleanly (its fusedSort arm always
-  * runs LAST in a round, so decaying external load systematically
-  * flatters it). Rounds alternate (A,B) / (B,A).
+  * (SortAggregate) — the round-16 argmin decision pair a fixed arm
+  * order could never read cleanly (the arm that always runs LAST in a
+  * round is systematically flattered by decaying external load).
+  * Rounds alternate (A,B) / (B,A).
   *
   * Usage: `runMain graft.tools.BenchFfArgminAB [fileGlob] [rounds]`.
   */

@@ -126,96 +126,11 @@ class PcapPipelineSpec extends SparkFunSuite {
     df.unpersist()
   }
 
-  test("applyWithSpill: one stats+spill job, same rows/branch as the lazy path") {
-    // round 12: the stats ride the ff-spill job via Dataset.observe on
-    // the PRE-FILTER frame. The load-bearing property is that Catalyst
-    // must not push the ff filter below CollectMetrics (the counts must
-    // cover every row) — pinned here by branch agreement with fragStats
-    // on a mixed corpus — and that the enrichment from the spilled ff is
-    // row-identical to the lazy aggregate subtree's.
-    val p = writeTemp("cap_spill.pcap", fragmentedCapture)
-    val df = PcapSource.read(spark, p.toString).cache()
-    val spill = java.nio.file.Files.createTempDirectory("ffspill").toString + "/ff"
-    val (out, choice) = Defrag.applyWithSpill(df, spill)
-    assert(choice == Defrag.BroadcastJoin) // 86% fragmented, tiny ff
-    // spilled ff row count = distinct datagram keys, exactly
-    val st = Defrag.fragStats(df)
-    assert(spark.read.parquet(spill).count() == st.distinctKeysEst)
-    def canon(d: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
-      d.collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString(""))
-    assert(canon(out) == canon(Defrag.defrag(df)))
-    // below-threshold corpus WITH one fragmented datagram among 500 TCP
-    // rows (round(100·2/502) = 0 < 1): the DISCRIMINATING case — had
-    // Catalyst pushed the ff filter below CollectMetrics, the observed
-    // total would count only the 2 fragment rows (100%) and wrongly
-    // defrag. (300 rows first tripped this assert legitimately:
-    // round(100·2/302) = 1 IS the threshold — the reference's integer-%
-    // rounding, main.rs:274.)
-    val frames = (1 to 500).map { i =>
-      (i * 1000L, -1, ethernet(0x0800,
-        ipv4("9.9.9.9", "8.8.8.8", 6, tcp(80, 2000 + i, 0x10))))
-    } ++ Seq(
-      (400000L, -1, ethernet(0x0800, ipv4("9.9.9.9", "8.8.8.8", 17,
-        udp(53, 41000, dnsQuery("x.example.org", 1)), id = 9, mf = true))),
-      (400001L, -1, ethernet(0x0800, ipv4("9.9.9.9", "8.8.8.8", 17,
-        Array.fill[Byte](16)(0x42), id = 9, fragOffset = 5))))
-    val p2 = writeTemp("cap_spill2.pcap", legacyPcap(frames))
-    val df2 = PcapSource.read(spark, p2.toString)
-    val spill2 = java.nio.file.Files.createTempDirectory("ffspill2").toString + "/ff"
-    val (out2, choice2) = Defrag.applyWithSpill(df2, spill2)
-    assert(choice2 == Defrag.NoDefrag,
-      s"got $choice2 — the ff filter reached below the observe node")
-    assert(out2.columns.toSeq == df2.columns.toSeq)
-    df.unpersist()
-  }
-
-  test("applyWithSpill with the ff-gated stats scan: identical rows, branch, and spill (round 13)") {
-    // the convert CLI's shape: the observe + ff-spill job reads the
-    // dissectGate=first-fragment scan (only actual first fragments pay
-    // transport/L7 dissection), the probe side reads the plain scan —
-    // output must be row-identical to the ungated spill path
-    val p = writeTemp("cap_gated.pcap", fragmentedCapture)
-    val plain = spark.read.format("pcap").load(p.toString)
-    val gated = spark.read.format("pcap")
-      .option("_internal.dissectGate", "first-fragment").load(p.toString)
-    val dir = java.nio.file.Files.createTempDirectory("ffspill_gate")
-    val (outGated, choiceGated) =
-      Defrag.applyWithSpill(plain, gated, dir.toString + "/g", 1.0)
-    val (outPlain, choicePlain) =
-      Defrag.applyWithSpill(plain, dir.toString + "/p")
-    assert(choiceGated == choicePlain)
-    def canon(d: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
-      d.collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString(""))
-    assert(canon(outGated) == canon(outPlain))
-    // the two spills agree row-for-row (same ff aggregate)
-    assert(canon(spark.read.parquet(dir.toString + "/g")) ==
-      canon(spark.read.parquet(dir.toString + "/p")))
-    // below-threshold corpus through the gated path: observed counts
-    // still cover every row (the gate must not disturb the observe
-    // barrier), so the skip decision is unchanged
-    val frames = (1 to 500).map { i =>
-      (i * 1000L, -1, ethernet(0x0800,
-        ipv4("9.9.9.9", "8.8.8.8", 6, tcp(80, 2000 + i, 0x10))))
-    } ++ Seq(
-      (400000L, -1, ethernet(0x0800, ipv4("9.9.9.9", "8.8.8.8", 17,
-        udp(53, 41000, dnsQuery("x.example.org", 1)), id = 9, mf = true))),
-      (400001L, -1, ethernet(0x0800, ipv4("9.9.9.9", "8.8.8.8", 17,
-        Array.fill[Byte](16)(0x42), id = 9, fragOffset = 5))))
-    val p2 = writeTemp("cap_gated2.pcap", legacyPcap(frames))
-    val plain2 = spark.read.format("pcap").load(p2.toString)
-    val gated2 = spark.read.format("pcap")
-      .option("_internal.dissectGate", "first-fragment").load(p2.toString)
-    val (out2, choice2) = Defrag.applyWithSpill(plain2, gated2,
-      java.nio.file.Files.createTempDirectory("ffspill_gate2").toString + "/ff", 1.0)
-    assert(choice2 == Defrag.NoDefrag)
-    assert(out2.columns.toSeq == plain2.columns.toSeq)
-  }
-
   test("fused stats pass ≡ observe stats + spill-built patch map (round 16)") {
     import graft.sources.DefragPatch
     // the fused job counts (total, fragmented) in the READERS and pushes
-    // the ff filter into the scan — it must reproduce the observe flow's
-    // stats exactly and build the identical patch map
+    // the ff filter into the scan — it must reproduce fragStats' counts
+    // over the plain scan exactly and build the identical patch map
     val p = writeTemp("cap_fused.pcap", fragmentedCapture)
     def gatedStats(path: String): (PcapSource.Metrics, org.apache.spark.sql.DataFrame) = {
       val sm = PcapSource.statsMetrics(spark)
@@ -237,10 +152,8 @@ class PcapPipelineSpec extends SparkFunSuite {
     val plain = spark.read.format("pcap").load(p.toString)
     val st = Defrag.fragStats(plain)
     assert(fused.total == st.total && fused.pct == st.pct,
-      s"fused (${fused.total}, ${fused.pct}) != observe (${st.total}, ${st.pct})")
-    val spill = java.nio.file.Files.createTempDirectory("fusedspill").toString + "/ff"
-    val (pctSpill, keysSpill) = Defrag.statsAndSpill(plain, spill)
-    assert(fused.pct == pctSpill && fused.ffKeys == keysSpill)
+      s"fused (${fused.total}, ${fused.pct}) != fragStats (${st.total}, ${st.pct})")
+    assert(fused.ffKeys == Defrag.firstFragments(plain).count())
     def entries(m: DefragPatch.PatchMap): Set[(String, String, Int, Int, Int, Int, Int, String, Int)] =
       m.ids.indices.map { i =>
         (m.strings(m.srcIdx(i)), m.strings(m.dstIdx(i)), m.ids(i),
@@ -250,13 +163,14 @@ class PcapPipelineSpec extends SparkFunSuite {
           m.protoIdx(i))
       }.toSet
     assert(entries(fused.map.get) ==
-      entries(DefragPatch.build(spark.read.parquet(spill))),
-      "fused patch map diverged from the spill-built one")
+      entries(DefragPatch.build(Defrag.firstFragments(plain))),
+      "fused patch map diverged from the one built over the plain scan")
 
-    // the DISCRIMINATING corpus (round-12's observe-barrier case, now
-    // the reader-counting case): 500 TCP rows + one 2-fragment datagram.
-    // The pushed ff filter vetoes the 500 TCP rows at the scan — the
-    // reader counters must still have counted them (pct 0, not 100)
+    // the DISCRIMINATING corpus: 500 TCP rows + one 2-fragment datagram
+    // (round(100·2/502) = 0 < 1; at 300 rows round(100·2/302) = 1 IS the
+    // threshold — the reference's integer-% rounding, main.rs:274). The
+    // pushed ff filter vetoes the 500 TCP rows at the scan — the reader
+    // counters must still have counted them (pct 0, not 100)
     val frames = (1 to 500).map { i =>
       (i * 1000L, -1, ethernet(0x0800,
         ipv4("9.9.9.9", "8.8.8.8", 6, tcp(80, 2000 + i, 0x10))))
@@ -305,6 +219,46 @@ class PcapPipelineSpec extends SparkFunSuite {
     val one = spark.read.parquet(outDir.toString + "/one.parquet")
     assert(one.columns.toSeq == got.columns.toSeq)
     assert(canon(one) == canon(want))
+  }
+
+  test("shuffle-leaf convert (ff keys past the ceiling) ≡ join defrag") {
+    // the ceiling at 0 overflows the fused stats collect, so run takes
+    // the spill + shuffle-join leaf; the spill is gone once run returns
+    val p = writeTemp("cap_shuffle.pcap", fragmentedCapture)
+    val outDir = java.nio.file.Files.createTempDirectory("shuffleconv")
+    val want = Defrag.defrag(PcapSource.read(spark, p.toString))
+    def canon(d: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+      d.selectExpr(d.columns.sorted.map(c => s"`$c`"): _*)
+        .collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString("|"))
+    sys.props("graft.defrag.maxBroadcastFF") = "0"
+    try {
+      for (single <- Seq(true, false)) {
+        val out = outDir.toString + s"/out-$single.parquet"
+        PcapConvert.run(spark, PcapConvert.Args(
+          file = p.toString, out = out, singleFile = single))
+        val got = spark.read.parquet(out)
+        assert(got.columns.toSeq ==
+          Defrag.defraggedOrder(graft.core.PacketSchema.schema.fieldNames.toSeq))
+        assert(canon(got) == canon(want), s"singleFile=$single")
+        assert(!Files.exists(java.nio.file.Paths.get(out + ".ffspill")),
+          s"singleFile=$single: ff spill left behind")
+      }
+    } finally sys.props.remove("graft.defrag.maxBroadcastFF")
+  }
+
+  test("parse: removed convert flags are unknown args, codec guard holds") {
+    val base = Array("-f", "in.pcap", "-o", "out.parquet")
+    for (flag <- Seq("--row-path", "--row-write", "--cache", "--no-cache")) {
+      val e = intercept[IllegalArgumentException](
+        PcapConvert.parse(base :+ flag))
+      assert(e.getMessage == s"unknown arg: $flag")
+    }
+    val e = intercept[IllegalArgumentException](
+      PcapConvert.parse(base ++ Array("-c", "brotli")))
+    assert(e.getMessage.contains("unknown or unbundled --compression 'brotli'"))
+    assert(PcapConvert.parse(base ++ Array("-c", "snappy", "-n", "-m"))
+      == PcapConvert.Args(file = "in.pcap", out = "out.parquet",
+        nodefrag = true, manifest = true, compression = "snappy"))
   }
 
   test("speculative single-pass convert: unfragmented corpus, and the mispredict fallback (round 13)") {
@@ -420,7 +374,7 @@ class PcapPipelineSpec extends SparkFunSuite {
     df.unpersist()
   }
 
-  test("full CLI pipeline writes snappy parquet with defrag applied") {
+  test("full CLI pipeline writes zstd parquet with defrag applied") {
     val p = writeTemp("cap5.pcap", fragmentedCapture)
     val outDir = Files.createTempDirectory("graft-out").resolve("out.parquet")
     PcapConvert.run(spark,
@@ -428,6 +382,10 @@ class PcapPipelineSpec extends SparkFunSuite {
     val back = spark.read.parquet(outDir.toString)
     assert(back.count() == 7)
     assert(back.filter(col("dns_qry_name") === "a.example.com").count() == 3)
+    val parts = Files.list(outDir).toArray.map(_.toString)
+      .filter(_.endsWith(".parquet"))
+    assert(parts.length == 1 && parts.head.endsWith(".zstd.parquet"),
+      parts.mkString(", "))
   }
 
   test("decodePartitions repartitions raw frames before dissection") {
